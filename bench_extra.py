@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Round-7 isolation bench (guide §1.4): times each bench stage with a
 noop sink so computation is measured separately from the parquet sink,
-labels jobs (guide §1.5), and breaks join_pairs into candidate-join /
-memo-reject / refine components. Does NOT replace bench.py (frozen);
+labels jobs (guide §1.5), and breaks join_pairs into the candidate
+join and the full join with its compiled polygon refine, timing plan
+build (polygon WKB collect, inscribed covers, SQL predicate compile
+and parse) apart from execution. Does NOT replace bench.py (frozen);
 numbers from here are cited in OPTIMIZATION_r07.md only.
 
 Usage: SPARK_GRAFT_CPUS=32 python bench_extra.py [--plans]
@@ -111,8 +113,9 @@ def main() -> None:
         prepared, queries, page_cols=["url", "warc_ts"],
         has_polygons=False))
 
-    # full join incl. memo refine; separate plan-build (eager reject
-    # job) from execution
+    # full join incl. the compiled polygon refine; separate plan build
+    # (WKB collect, covers, SQL predicate compile + parse) from
+    # execution
     def build_and_time_full(i):
         spark.sparkContext.setJobDescription(f"join_full build #{i}")
         t0 = time.time()

@@ -1,36 +1,42 @@
-"""Compile driver-captured geometry pieces to pure-Column predicates.
+"""Compile driver-captured geometry pieces to one SQL predicate.
 
-The spatial join's refine step evaluates exact rect x geometry
-intersects for polygon-kind queries. The numpy kernels
-(predicates.py) run Arrow-batched in mapInPandas — correct, but the
-whole candidate stream then pays Arrow serialization + Python worker
-time, which measures as the join stage's scaling ceiling at high
-parallelism (the Column-only join runs ~3x faster at local[16] on the
-bench input than the same join with the Arrow refine attached).
+The engine answers ST_Intersects(footprint, geometry) from three entry
+points — spatial_join's polygon residual, ``Search.intersects`` and
+CQL2 ``s_intersects`` — and every in-budget exact test goes through
+this compiler. The footprint side is always an axis-aligned rect (the
+join's xmin/ymin/xmax/ymax columns, the item table's bbox struct), so
+rect x geometry is the whole question.
 
-Since the broadcast-join path already captures every polygon's pieces
-driver-side (geo/join.py:190-199), small geometries — the common STAC
-search contract: a handful of query polygons with tens of vertices —
-can instead be compiled into a boolean Column expression evaluated
-inside WholeStageCodegen: zero Python, zero Arrow, short-circuited
-per row.
+Why SQL text: the predicate is emitted as ONE SQL expression string
+and parsed with a single ``F.expr``. Building the same expression as a
+pyspark Column tree costs one py4j round trip per node — thousands per
+polygon, seconds for a probe set — which made every plan build pay a
+large serial driver cost. A string costs Python string work plus one
+Catalyst parse, cheap enough to pay per plan with no cache. Literals
+are emitted as ``repr(float)`` with a ``D`` suffix: ``repr`` is the
+shortest string that round-trips the double, and the suffix makes
+Spark parse a DOUBLE literal (a bare ``1.5`` is a DECIMAL, which would
+change the arithmetic). Negative literals are parenthesized so a
+``--`` can never open a SQL comment.
 
-Physical form matters: a direct Column transliteration of the
-ray-cast + on-edge kernels produced ~900 expression nodes per polygon
-and the whole-refine CASE chain then exceeded the JVM's 64 KB
-per-method bytecode limit — Janino fails, Spark silently falls back
-to INTERPRETED per-row evaluation, and the "compiled" join ran 3x
-slower than the Arrow path (measured at local[8], sf0.4). So the
-compiler instead emits separating-axis (SAT) conjunctions:
+Physical form matters: a direct transliteration of the ray-cast +
+on-edge kernels produces ~900 expression nodes per polygon, and past
+the JVM's 64 KB per-method bytecode limit Janino fails and Spark falls
+back to interpreted evaluation. The compiler instead emits
+separating-axis (SAT) conjunctions:
 
 - convex ring: one SAT block over the whole ring — rect-axis bbox
   overlap + one projection-overlap conjunction per edge normal, with
   the rect's projection extrema resolved to xmin/xmax (ymin/ymax) at
-  BUILD time from the normal's sign. ~16 nodes per edge.
+  BUILD time from the normal's sign. An axis-aligned edge adds no
+  conjunct: its normal is a coordinate axis, and because float
+  multiplication by a constant is monotonic the bbox conjunct already
+  implies it. A rect ring therefore compiles to exactly the bbox
+  overlap, and a point to four comparisons — the pushable forms.
 - non-convex ring: ear-clip triangulation (driver-side, exact
   float64) and OR the per-triangle SAT blocks. Triangles tile the
   closed polygon exactly, so rect ∩ polygon ≠ ∅ ⟺ ∃ triangle with
-  rect ∩ triangle ≠ ∅. ~55 nodes per triangle.
+  rect ∩ triangle ≠ ∅.
 - holes: candidate accepted unless the rect is STRICTLY inside a
   hole: all four corners inside the hole (point-in-convex /
   point-in-triangle = SAT with a degenerate rect) and no hole edge
@@ -39,37 +45,16 @@ compiler instead emits separating-axis (SAT) conjunctions:
 The SAT arithmetic mirrors the DuckDB oracle's formulation
 (__spark_entry__._sat_convex_conds) term for term, so the compiled
 predicate is the same exact closed-set intersection test the
-correctness gate checks. Versus the numpy kernels the accepted sets
-are identical except for rects separated from the geometry by less
-than 1e-12 — the kernels' on-edge tolerance shell, which SAT (exact
-closed-set math) does not widen; tests/test_colgeom.py locks
+correctness gate checks. Versus the numpy kernels (predicates.py, the
+over-budget fallback) the accepted sets are identical except for rects
+separated from the geometry by less than 1e-12 — the kernels' on-edge
+tolerance shell, which SAT does not widen; tests/test_colgeom.py locks
 set-equality on random + exact-boundary rect soups.
-
-MEASURED OUTCOME, rounds 4-6 (this 32-core sandbox, sf0.4 probe
-set, 17 polygons): even with codegen verified working (factoryMode
-CODEGEN_ONLY passes), the compiled join tied the Arrow refine at
-local[8] (13.5 vs 13.8 s) and lost badly at local[16] (26.7 vs
-9.2 s, stable across passes) — the per-row SAT eval over the whole
-polygon stream anti-scaled, so compilation stayed opt-in through
-round 6.
-
-RE-MEASURED, round 7: the multi-rect inscribed covers
-(predicates.inscribed_rects, up to 3 verified interior rects per
-polygon) absorb ~94% of polygon candidates BEFORE any SAT block
-runs, which flips the economics: compiled now beats the memoized
-refine at every parallelism level (sf0.1 build+write interleaved
-A/B: local[8] 2.39 vs 3.35 s, local[16] 1.75 vs 2.62 s, local[32]
-1.63 vs 2.75 s), with zero eager Spark jobs at plan build. The
-compiled predicate is therefore the spatial_join DEFAULT since
-round 7 (geo/join.py), with the memo as the out-of-budget fallback.
-The analysis below of WHERE generated code breaks remains
-load-bearing for any future Column geometry work.
 
 Two budgets gate compilation (callers fall back to the Arrow kernel
 on None): a per-geometry vertex cap (bounds per-row evaluation cost)
-and a total expression-node cap across all queries (keeps the
-generated filter method far below the 64 KB bytecode ceiling that
-broke the v1 compiler).
+and, for the join's per-query CASE chain, a total expression-node cap
+(keeps the generated filter far below the 64 KB bytecode ceiling).
 
 Reference behaviour compiled here: ST_Intersects residual semantics of
 crates/duckdb/src/client.rs:343-359 / crates/core/src/item.rs:457-468.
@@ -77,11 +62,17 @@ crates/duckdb/src/client.rs:343-359 / crates/core/src/item.rs:457-468.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, functions as F
 
+from .predicates import is_axis_aligned_rect_ring
+
 # Per-query vertex cap: past this, per-row evaluation cost stops
 # paying for itself against the Arrow kernel's vectorized batches.
+# Points and axis-aligned rect rings compile to four comparisons each
+# and do not count against it.
 DEFAULT_VERTEX_BUDGET = 96
 
 # Total estimated expression nodes across ALL compiled queries.
@@ -91,6 +82,10 @@ DEFAULT_VERTEX_BUDGET = 96
 # Janino ceiling (~2-4k nodes, measured) no longer binds; this cap
 # bounds generated-class size and plan/compile latency instead.
 DEFAULT_NODE_BUDGET = 24000
+
+# rect column names: the join's candidate stream, the item bbox struct
+JOIN_RECT = ("xmin", "ymin", "xmax", "ymax")
+ITEM_RECT = ("bbox.xmin", "bbox.ymin", "bbox.xmax", "bbox.ymax")
 
 # cost model (estimated expression nodes) per compiled construct
 _NODES_PER_SAT_AXIS = 16
@@ -186,271 +181,237 @@ def ear_clip(ring) -> list[np.ndarray] | None:
     return tris if tris else None
 
 
-def sat_convex_col(verts, rx0: Column, ry0: Column,
-                   rx1: Column, ry1: Column) -> Column:
+def sql_double(v: float) -> str:
+    """A float64 as a Spark SQL DOUBLE literal that parses back to the
+    same bits: shortest round-trip ``repr`` + ``D`` suffix."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    s = repr(v) + "D"
+    return f"({s})" if s.startswith("-") else s
+
+
+def _and(terms: list[str]) -> str:
+    return "(" + " AND ".join(terms) + ")"
+
+
+def _or(terms: list[str]) -> str:
+    return "(" + " OR ".join(terms) + ")"
+
+
+def sat_convex_sql(verts, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
     """rect × convex polygon intersection as a separating-axis
-    conjunction — the Column twin of the DuckDB oracle's
+    conjunction — the SQL twin of the DuckDB oracle's
     _sat_convex_conds (__spark_entry__.py), same arithmetic term for
     term: rect-axis bbox overlap, then per edge normal (nx, ny) =
     (y2-y1, -(x2-x1)) an overlap test of [rmin, rmax] vs the
     constant-folded polygon projection interval, where the rect's
     extremal corner per normal is chosen at BUILD time from the
-    normal's sign."""
+    normal's sign. The rect sides are column names or SQL
+    expressions."""
     verts = [(float(x), float(y)) for x, y in np.asarray(
         verts, dtype=np.float64)]
     xs = [v[0] for v in verts]
     ys = [v[1] for v in verts]
-    cond = ((rx0 <= F.lit(max(xs))) & (rx1 >= F.lit(min(xs)))
-            & (ry0 <= F.lit(max(ys))) & (ry1 >= F.lit(min(ys))))
+    conds = [f"{rx0} <= {sql_double(max(xs))}",
+             f"{rx1} >= {sql_double(min(xs))}",
+             f"{ry0} <= {sql_double(max(ys))}",
+             f"{ry1} >= {sql_double(min(ys))}"]
     n = len(verts)
     for i in range(n):
         x1, y1 = verts[i]
         x2, y2 = verts[(i + 1) % n]
         nx, ny = (y2 - y1), -(x2 - x1)
-        if nx == 0.0 and ny == 0.0:
-            continue  # degenerate edge
+        if nx == 0.0 or ny == 0.0:
+            continue  # degenerate or axis-aligned: the bbox implies it
         projs = [nx * vx + ny * vy for vx, vy in verts]
         pmin, pmax = min(projs), max(projs)
         rlo_x, rhi_x = (rx0, rx1) if nx > 0 else (rx1, rx0)
         rlo_y, rhi_y = (ry0, ry1) if ny > 0 else (ry1, ry0)
-        rmin = F.lit(nx) * rlo_x + F.lit(ny) * rlo_y
-        rmax = F.lit(nx) * rhi_x + F.lit(ny) * rhi_y
-        cond = cond & (rmin <= F.lit(pmax)) & (rmax >= F.lit(pmin))
-    return cond
+        lnx, lny = sql_double(nx), sql_double(ny)
+        rmin = f"(({lnx} * {rlo_x}) + ({lny} * {rlo_y}))"
+        rmax = f"(({lnx} * {rhi_x}) + ({lny} * {rhi_y}))"
+        conds.append(f"{rmin} <= {sql_double(pmax)}")
+        conds.append(f"{rmax} >= {sql_double(pmin)}")
+    return _and(conds)
 
 
-def segment_hits_rect_col(x1: float, y1: float, x2: float, y2: float,
-                          rx0: Column, ry0: Column,
-                          rx1: Column, ry1: Column) -> Column:
-    """Column twin of predicates._segments_intersect_rects for one
+def segment_hits_rect_sql(x1: float, y1: float, x2: float, y2: float,
+                          rx0: str, ry0: str, rx1: str, ry1: str) -> str:
+    """SQL twin of predicates._segments_intersect_rects for one
     constant segment vs per-row rects (Liang-Barsky). The p==0 /
     p<0 / p>0 branching resolves at expression-build time because the
     segment is constant."""
     dx, dy = x2 - x1, y2 - y1
-    qs = ((-dx, F.lit(x1) - rx0), (dx, rx1 - F.lit(x1)),
-          (-dy, F.lit(y1) - ry0), (dy, ry1 - F.lit(y1)))
-    ok: Column = F.lit(True)
-    t0: Column = F.lit(0.0)
-    t1: Column = F.lit(1.0)
+    lx1, ly1 = sql_double(x1), sql_double(y1)
+    qs = ((-dx, f"({lx1} - {rx0})"), (dx, f"({rx1} - {lx1})"),
+          (-dy, f"({ly1} - {ry0})"), (dy, f"({ry1} - {ly1})"))
+    conds = []
+    t0, t1 = sql_double(0.0), sql_double(1.0)
     for p, q in qs:
         if p == 0:
-            ok = ok & (q >= F.lit(0.0))
+            conds.append(f"{q} >= {sql_double(0.0)}")
         elif p < 0:
-            t0 = F.greatest(t0, q / F.lit(p))
+            t0 = f"greatest({t0}, {q} / {sql_double(p)})"
         else:
-            t1 = F.least(t1, q / F.lit(p))
-    return ok & (t0 <= t1)
+            t1 = f"least({t1}, {q} / {sql_double(p)})"
+    conds.append(f"{t0} <= {t1}")
+    return _and(conds)
+
+
+def _point_sql(x: float, y: float, rx0, ry0, rx1, ry1) -> str:
+    lx, ly = sql_double(x), sql_double(y)
+    return _and([f"{rx0} <= {lx}", f"{lx} <= {rx1}",
+                 f"{ry0} <= {ly}", f"{ly} <= {ry1}"])
 
 
 def _ring_sat(pts: np.ndarray, rx0, ry0, rx1, ry1
-              ) -> tuple[Column, int] | None:
+              ) -> tuple[str, int] | None:
     """(intersects-expr, node estimate) for one exterior ring."""
     if _is_convex(pts):
         n_axes = len(pts) + 2
-        return (sat_convex_col(pts, rx0, ry0, rx1, ry1),
+        return (sat_convex_sql(pts, rx0, ry0, rx1, ry1),
                 n_axes * _NODES_PER_SAT_AXIS)
     tris = ear_clip(pts)
     if tris is None:
         return None
-    out: Column | None = None
-    for tri in tris:
-        t = sat_convex_col(tri, rx0, ry0, rx1, ry1)
-        out = t if out is None else out | t
-    return out, len(tris) * 5 * _NODES_PER_SAT_AXIS
+    return (_or([sat_convex_sql(t, rx0, ry0, rx1, ry1) for t in tris]),
+            len(tris) * 5 * _NODES_PER_SAT_AXIS)
 
 
 def _rect_strictly_inside_hole(pts: np.ndarray, rx0, ry0, rx1, ry1
-                               ) -> tuple[Column, int] | None:
-    """Column twin of predicates._rect_strictly_inside_ring for a
-    hole ring: all four rect corners inside the closed hole AND no
-    hole edge touching the rect. Corner membership is point-in-convex
-    (or point-in-any-triangle) — SAT with a degenerate rect."""
-    if _is_convex(pts):
-        regions: list[np.ndarray] | None = [pts]
-    else:
-        regions = ear_clip(pts)
+                               ) -> tuple[str, int] | None:
+    """SQL twin of predicates._rect_strictly_inside_ring for a hole
+    ring: all four rect corners inside the closed hole AND no hole
+    edge touching the rect. Corner membership is point-in-convex (or
+    point-in-any-triangle) — SAT with a degenerate rect."""
+    regions = [pts] if _is_convex(pts) else ear_clip(pts)
     if regions is None:
         return None
-    corners_in: Column = F.lit(True)
-    nodes = 0
-    for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)):
-        corner: Column | None = None
-        for reg in regions:
-            t = sat_convex_col(reg, cx, cy, cx, cy)
-            corner = t if corner is None else corner | t
-            nodes += (len(reg) + 2) * _NODES_PER_SAT_AXIS
-        corners_in = corners_in & corner
-    edge_touch: Column = F.lit(False)
+    corners = [_or([sat_convex_sql(reg, cx, cy, cx, cy) for reg in regions])
+               for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1),
+                              (rx0, ry1))]
+    nodes = 4 * sum((len(reg) + 2) * _NODES_PER_SAT_AXIS for reg in regions)
     n = len(pts)
-    for i in range(n):
-        x1, y1 = pts[i]
-        x2, y2 = pts[(i + 1) % n]
-        edge_touch = edge_touch | segment_hits_rect_col(
-            float(x1), float(y1), float(x2), float(y2),
-            rx0, ry0, rx1, ry1)
-        nodes += _NODES_PER_SEGMENT
-    return corners_in & ~edge_touch, nodes
+    edges = [segment_hits_rect_sql(
+        float(pts[i][0]), float(pts[i][1]),
+        float(pts[(i + 1) % n][0]), float(pts[(i + 1) % n][1]),
+        rx0, ry0, rx1, ry1) for i in range(n)]
+    nodes += n * _NODES_PER_SEGMENT
+    return f"({_and(corners)} AND NOT {_or(edges)})", nodes
 
 
 def _n_vertices(pieces) -> int:
+    """Vertices counted against the vertex budget. Points and
+    axis-aligned rect rings are free: they compile to four
+    comparisons each."""
     total = 0
     for kind, data in pieces:
-        if kind == "point":
-            total += 1
-        elif kind == "line":
+        if kind == "line":
             total += len(data)
-        else:
+        elif kind == "poly" and not (
+                len(data) == 1 and is_axis_aligned_rect_ring(data[0])):
             total += sum(len(ring) for ring in data)
     return total
 
 
-def compile_pieces_predicate(pieces, rx0: Column, ry0: Column,
-                             rx1: Column, ry1: Column,
+def compile_pieces_predicate(pieces, rect: tuple[str, str, str, str],
                              vertex_budget: int | None = None,
-                             ) -> tuple[Column, int] | None:
-    """(expr, node estimate): does the per-row rect intersect ANY
-    piece — the Column twin of predicates.rects_intersect_pieces
-    (union semantics of Multi*/GeometryCollection, search.rs:236-251).
+                             ) -> tuple[str, int] | None:
+    """(SQL expr, node estimate): does the rect named by ``rect``
+    (xmin, ymin, xmax, ymax column names — JOIN_RECT or ITEM_RECT)
+    intersect ANY piece — the SQL twin of
+    predicates.rects_intersect_pieces (union semantics of
+    Multi*/GeometryCollection, search.rs:236-251). An empty piece list
+    intersects nothing and compiles to ``false``.
 
     Returns None when the geometry exceeds ``vertex_budget`` vertices
     or a ring cannot be triangulated — the caller keeps the Arrow
-    kernel for that query.
+    kernel for that geometry.
     """
     if vertex_budget is None:
         vertex_budget = DEFAULT_VERTEX_BUDGET
     if _n_vertices(pieces) > vertex_budget:
         return None
-    out: Column = F.lit(False)
+    terms: list[str] = []
     nodes = 0
     for kind, data in pieces:
         if kind == "point":
-            x, y = float(data[0]), float(data[1])
-            out = out | ((rx0 <= F.lit(x)) & (F.lit(x) <= rx1)
-                         & (ry0 <= F.lit(y)) & (F.lit(y) <= ry1))
+            terms.append(_point_sql(float(data[0]), float(data[1]), *rect))
             nodes += _NODES_PER_POINT
         elif kind == "line":
             pts = np.asarray(data, dtype=np.float64)
             if len(pts) == 1:
-                x, y = float(pts[0][0]), float(pts[0][1])
-                out = out | ((rx0 <= F.lit(x)) & (F.lit(x) <= rx1)
-                             & (ry0 <= F.lit(y)) & (F.lit(y) <= ry1))
+                terms.append(_point_sql(float(pts[0][0]), float(pts[0][1]),
+                                        *rect))
                 nodes += _NODES_PER_POINT
             for i in range(len(pts) - 1):
-                out = out | segment_hits_rect_col(
+                terms.append(segment_hits_rect_sql(
                     float(pts[i][0]), float(pts[i][1]),
-                    float(pts[i + 1][0]), float(pts[i + 1][1]),
-                    rx0, ry0, rx1, ry1)
+                    float(pts[i + 1][0]), float(pts[i + 1][1]), *rect))
                 nodes += _NODES_PER_SEGMENT
         else:  # poly: rings[0] exterior, rest holes
             rings = [_close_open(r) for r in data]
-            ext = _ring_sat(rings[0], rx0, ry0, rx1, ry1)
+            ext = _ring_sat(rings[0], *rect)
             if ext is None:
                 return None
             poly, n_ext = ext
             nodes += n_ext
             for hole in rings[1:]:
-                h = _rect_strictly_inside_hole(hole, rx0, ry0, rx1, ry1)
+                h = _rect_strictly_inside_hole(hole, *rect)
                 if h is None:
                     return None
                 inside_hole, n_hole = h
-                poly = poly & ~inside_hole
+                poly = f"({poly} AND NOT {inside_hole})"
                 nodes += n_hole
-            out = out | poly
-    return out, nodes
-
-
-# Compiled-predicate cache: building the SAT Column tree is DRIVER
-# work — thousands of py4j round trips (~4-6 s measured for the
-# 17-polygon bench set) paid identically at every parallelism level,
-# i.e. pure serial cost on every fresh spatial_join over the same
-# query set. Geometries are content-hashed (pickle of the numpy
-# pieces) and the finished Column reused: a Column is an immutable
-# expression tree, safe to splice into any number of plans.
-_COMPILE_CACHE: dict[tuple, "Column | None"] = {}
-_COMPILE_CACHE_MAX = 32
-
-
-def _compile_cache_key(pieces_by_qid, inner_by_qid, cols, budgets):
-    import hashlib
-    import pickle
-    geo = hashlib.sha256(pickle.dumps(
-        (sorted(pieces_by_qid.items()),
-         sorted((inner_by_qid or {}).items())))).hexdigest()
-    return (geo, tuple(str(c) for c in cols), budgets)
-
-
-def _cache_put(key, value) -> None:
-    if len(_COMPILE_CACHE) >= _COMPILE_CACHE_MAX:
-        _COMPILE_CACHE.pop(next(iter(_COMPILE_CACHE)))
-    _COMPILE_CACHE[key] = value
+            terms.append(poly)
+    return (_or(terms) if terms else "false"), nodes
 
 
 def compile_refine_predicate(pieces_by_qid: dict[int, list],
-                             inner_by_qid: dict[int, tuple] | None,
-                             qid: Column, kind: Column | None,
-                             rx0: Column, ry0: Column,
-                             rx1: Column, ry1: Column,
+                             inner_by_qid: dict[int, list] | None,
                              vertex_budget: int | None = None,
                              node_budget: int | None = None,
                              ) -> Column | None:
-    """The whole refine filter as one Column, or None if ANY query's
-    geometry exceeds a budget (all-or-nothing: a partial compile
-    would still drag the full stream through Arrow for the rest, so
-    there is nothing to win).
+    """spatial_join's whole polygon refine filter as one Column over
+    the candidate stream (query_id, kind and the JOIN_RECT columns),
+    or None if ANY query's geometry exceeds a budget (all-or-nothing:
+    a partial compile would still drag the full stream through Arrow
+    for the rest, so there is nothing to win).
 
     Matches _mixed_refine row semantics: non-polygon kinds pass (rect
     overlap is already exact for them), polygon kinds take the
     compiled exact test, with the inscribed-rect containment accept
-    short-circuiting ahead of it (geo/join.py:96-101).
+    short-circuiting ahead of it.
 
     ``node_budget`` bounds the ESTIMATED expression-node total across
-    all queries: the CASE chain lands in one generated method, and
-    past the JVM's 64 KB bytecode ceiling Janino fails and Spark
-    falls back to interpreted evaluation — slower than the Arrow
-    kernel this compiler exists to beat.
+    all queries, which bounds generated-class size and plan latency.
     """
     if node_budget is None:
         node_budget = DEFAULT_NODE_BUDGET
-    ckey = _compile_cache_key(
-        pieces_by_qid, inner_by_qid,
-        (qid, kind if kind is not None else "<nokind>",
-         rx0, ry0, rx1, ry1),
-        (vertex_budget, node_budget))
-    if ckey in _COMPILE_CACHE:
-        return _COMPILE_CACHE[ckey]
-    case: Column | None = None
+    rx0, ry0, rx1, ry1 = JOIN_RECT
+    whens: list[str] = []
     total_nodes = 0
     for q, pieces in pieces_by_qid.items():
-        compiled = compile_pieces_predicate(pieces, rx0, ry0, rx1, ry1,
+        compiled = compile_pieces_predicate(pieces, JOIN_RECT,
                                             vertex_budget)
         if compiled is None:
-            _cache_put(ckey, None)
             return None
         expr, nodes = compiled
         total_nodes += nodes
         if total_nodes > node_budget:
-            _cache_put(ckey, None)
             return None
-        # r7: entries may be a single rect tuple (legacy) or a LIST
-        # of inscribed rects — inside ANY of them short-circuits the
-        # exact test
-        irs = (inner_by_qid or {}).get(q)
-        if isinstance(irs, tuple):
-            irs = [irs]
-        for ir in (irs or []):
-            inside_ir = ((rx0 >= F.lit(float(ir[0])))
-                         & (ry0 >= F.lit(float(ir[1])))
-                         & (rx1 <= F.lit(float(ir[2])))
-                         & (ry1 <= F.lit(float(ir[3]))))
-            expr = inside_ir | expr
-        case = (F.when(qid == F.lit(q), expr) if case is None
-                else case.when(qid == F.lit(q), expr))
-    polygon_ok = F.lit(False) if case is None else case.otherwise(
-        F.lit(False))
-    # kind=None: the caller's frame is polygon rows only (the memoized
-    # refine's hard-candidate frame), so the pass-through term drops
-    pred = (polygon_ok if kind is None
-            else (kind != F.lit("polygon")) | polygon_ok)
+        # inside ANY inscribed rect short-circuits the exact test
+        inside = [_and([f"{rx0} >= {sql_double(ir[0])}",
+                        f"{ry0} >= {sql_double(ir[1])}",
+                        f"{rx1} <= {sql_double(ir[2])}",
+                        f"{ry1} <= {sql_double(ir[3])}"])
+                  for ir in (inner_by_qid or {}).get(q, [])]
+        whens.append(f"WHEN query_id = {int(q)} THEN {_or(inside + [expr])}")
+    polygon_ok = (f"CASE {' '.join(whens)} ELSE false END" if whens
+                  else "false")
     # WSCG escape hatch: inlined into a WholeStageCodegen consume()
     # (or merged into the broadcast join's condition) this CASE chain
     # lands in ONE Java method and Janino fails past ~2-4k nodes
@@ -472,17 +433,14 @@ def compile_refine_predicate(pieces_by_qid: dict[int, list],
     #   through GeneratePredicate in INPUT_ROW mode, where Spark CAN
     #   split the CASE branches into separate (JIT-able) methods.
     # Cost: the predicate conjunct runs first, so only ACCEPTED rows
-    # pay the anchor's interpreted 1-element array probe (&& short-
+    # pay the anchor's interpreted 1-element array probe (AND short-
     # circuits); rejected rows pay one extra int compare.
-    # FIXED seed: F.rand() draws a fresh seed per call, making the
-    # expression tree differ between otherwise-identical plans — every
-    # fresh spatial_join then misses the codegen cache and re-Janinos
-    # the whole CASE predicate (~5 s/pass measured in the bench
-    # pipeline). rand(42) is still flagged nondeterministic (which is
-    # all the anchor needs) but keeps the tree — and the generated
-    # code — identical across plan builds, so compilation is paid once
-    # per session.
-    anchor = F.exists(F.array(F.rand(42)), lambda x: x >= F.lit(-1.0))
-    out = (pred | (F.spark_partition_id() < F.lit(0))) & anchor
-    _cache_put(ckey, out)
-    return out
+    # FIXED seed: an unseeded rand() draws a fresh seed per plan, so
+    # otherwise-identical plans would differ and every fresh
+    # spatial_join would miss the codegen cache and re-Janino the
+    # whole CASE predicate. rand(42) is still nondeterministic (all
+    # the anchor needs) but keeps the generated code identical across
+    # plan builds, so compilation is paid once per session.
+    return F.expr(
+        f"((kind <> 'polygon' OR {polygon_ok}) OR spark_partition_id() < 0)"
+        " AND exists(array(rand(42)), a -> a >= -1.0D)")

@@ -1,17 +1,19 @@
 """Shared bbox-struct Column predicates — the single home for the
-engine's pushdown-friendly spatial fast paths, used by both the
-search planner (stac/search.py) and the CQL2 compiler (stac/cql2.py).
+engine's item-side spatial filters, used by both the search planner
+(stac/search.py) and the CQL2 compiler (stac/cql2.py).
 
 Every item table carries the bbox struct covering index
 (crates/core/src/geoparquet.rs:397-435); these predicates compile
-against it so Catalyst pushes them into the parquet scan.
+against it so Catalyst pushes the bbox comparisons into the parquet
+scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
-from .predicates import is_axis_aligned_rect_ring
+from .colgeom import ITEM_RECT, compile_pieces_predicate
+from .wkbio import pieces_bounds
 
 
 def bbox_overlap_col(qxmin, qymin, qxmax, qymax):
@@ -24,36 +26,21 @@ def bbox_overlap_col(qxmin, qymin, qxmax, qymax):
             & (F.col("bbox.ymax") >= F.lit(qymin)))
 
 
-def point_in_bbox_col(x, y):
-    return ((F.col("bbox.xmin") <= F.lit(x)) & (F.col("bbox.xmax") >= F.lit(x))
-            & (F.col("bbox.ymin") <= F.lit(y)) & (F.col("bbox.ymax") >= F.lit(y)))
+def s_intersects_cols(pieces: list) -> tuple[Column, Column | None]:
+    """(prefilter, exact) Columns for ST_Intersects(item bbox,
+    geometry), where ``pieces`` is wkbio.geometry_pieces output.
 
-
-def pieces_column_pred(pieces: list):
-    """Pure-Column fast path for an intersects geometry: OR of
-    point-in-bbox / rect-overlap predicates over the geometry's
-    pieces (wkbio.geometry_pieces output).
-
-    Returns None when any piece needs the exact refine kernel
-    (non-rectangular polygon or a line). An EMPTY piece list — a
-    GeoJSON-legal empty GeometryCollection — intersects nothing and
-    compiles to a constant false predicate."""
+    The prefilter is the bbox overlap with the geometry's bounds — the
+    conjunct Catalyst pushes into the scan. ``exact`` is the predicate
+    compiled by geo/colgeom, a plain deterministic Column; the row
+    intersects iff both hold. ``exact`` is None over the compile
+    budget (or for a ring that cannot be triangulated): the caller
+    must then apply the exact Arrow refine (search._geometry_refine)
+    on the same pieces after the prefilter. An EMPTY piece list — a
+    GeoJSON-legal empty GeometryCollection — intersects nothing:
+    constant false."""
     if not pieces:
-        return F.lit(False)
-    cols = []
-    for kind, data in pieces:
-        if kind == "point":
-            cols.append(point_in_bbox_col(*data))
-        elif kind == "poly" and len(data) == 1 \
-                and is_axis_aligned_rect_ring(data[0]):
-            r = data[0]
-            cols.append(bbox_overlap_col(float(r[:, 0].min()),
-                                         float(r[:, 1].min()),
-                                         float(r[:, 0].max()),
-                                         float(r[:, 1].max())))
-        else:
-            return None
-    out = cols[0]
-    for c in cols[1:]:
-        out = out | c
-    return out
+        return F.lit(False), F.lit(False)
+    compiled = compile_pieces_predicate(pieces, ITEM_RECT)
+    return (bbox_overlap_col(*pieces_bounds(pieces)),
+            None if compiled is None else F.expr(compiled[0]))

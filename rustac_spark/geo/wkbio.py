@@ -215,13 +215,17 @@ def geometry_pieces(parsed):
 
 def wkb_bounds(buf: bytes):
     """(xmin, ymin, xmax, ymax) of any supported WKB geometry."""
-    pieces = geometry_pieces(parse_wkb(buf))
+    return pieces_bounds(geometry_pieces(parse_wkb(buf)))
+
+
+def pieces_bounds(pieces):
+    """(xmin, ymin, xmax, ymax) of geometry_pieces output."""
     if not pieces:
         raise ValueError("empty geometry has no bounds")
     xs0, ys0, xs1, ys1 = [], [], [], []
     for kind, data in pieces:
         if kind == "point":
-            x, y = data
+            x, y = float(data[0]), float(data[1])
             xs0.append(x), ys0.append(y), xs1.append(x), ys1.append(y)
         elif kind == "line":
             xs0.append(float(data[:, 0].min()))

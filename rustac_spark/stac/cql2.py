@@ -14,12 +14,13 @@ crates/duckdb/src/client.rs:386-394):
   t_before/t_after (strict < / > on instants) / t_intersects ;
   s_intersects(geometry, <WKT | BBOX(...) | GeoJSON dict>) — the
   reference compiles spatial CQL2 ops to DuckDB ST_Intersects
-  (crates/duckdb/src/client.rs:386-394); here they compile to the
-  engine's bbox-overlap Column (point / axis-aligned-rect literals,
-  valid anywhere in the boolean tree) or, for general geometries, a
-  bbox prefilter Column + exact Arrow-batched refine. General-geometry
-  s_intersects must sit in a conjunctive (top-level AND) position —
-  refines are conjunctive; under OR/NOT the compiler raises.
+  (crates/duckdb/src/client.rs:386-394); here they compile to the bbox
+  prefilter AND the exact predicate from geo/colgeom, one
+  deterministic Column valid anywhere in the boolean tree. Only a
+  geometry over colgeom's compile budget falls back to the bbox
+  prefilter + exact Arrow-batched refine, and because refines are
+  conjunctive it must then sit in a top-level AND position; under
+  OR/NOT the compiler raises.
 - Plan-time empty-result short-circuit: if any referenced property is
   not a column, the whole query returns empty
   (expr_properties_match, crates/duckdb/src/client.rs:433-455).
@@ -37,7 +38,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from ..geo.colpreds import bbox_overlap_col, pieces_column_pred
+from ..geo.colpreds import s_intersects_cols
 from ..geo.predicates import rects_intersect_pieces
 from ..geo.wkbio import (bbox_polygon_wkb, geojson_to_wkb, geometry_pieces,
                          linestring_wkb, multilinestring_wkb, multipoint_wkb,
@@ -474,12 +475,11 @@ def _col(name: str):
     return F.col(f"`{name}`") if ("." in name or ":" in name) else F.col(name)
 
 
-def _s_intersects_column(geom: Geom):
-    """Pure-Column s_intersects for point / axis-aligned-rect literals
-    (valid anywhere in the boolean tree) — shared fast path in
-    geo/colpreds. Returns None when the geometry needs the exact
-    refine kernel; an empty geometry compiles to constant false."""
-    return pieces_column_pred(geometry_pieces(parse_wkb(geom.wkb)))
+def _s_intersects_cols(geom: Geom):
+    """(prefilter, exact | None, pieces) for an s_intersects geometry
+    literal — see colpreds.s_intersects_cols."""
+    pieces = geometry_pieces(parse_wkb(geom.wkb))
+    return (*s_intersects_cols(pieces), pieces)
 
 
 def to_column(ast):
@@ -541,13 +541,13 @@ def to_column(ast):
             if not isinstance(a[1], Geom):
                 raise Cql2Error(
                     "s_intersects needs a geometry literal second arg")
-            col = _s_intersects_column(a[1])
-            if col is None:
+            prefilter, exact, _ = _s_intersects_cols(a[1])
+            if exact is None:
                 raise Cql2Error(
-                    "s_intersects with a non-rectangular geometry must be "
-                    "in a top-level AND position (compile_filter handles "
-                    "it there via bbox prefilter + exact refine)")
-            return col
+                    "s_intersects with a geometry over the compile budget "
+                    "must be in a top-level AND position (compile_filter "
+                    "handles it there via bbox prefilter + exact refine)")
+            return prefilter & exact
         if op == "isNull":
             return to_column(a[0]).isNull()
         if op == "in":
@@ -713,9 +713,10 @@ def compile_filter(filt, columns: list[str]):
     against the schema, client.rs:386-394).
 
     refines: for each top-level-AND s_intersects conjunct whose
-    geometry is not point/rect, the Column part carries only its bbox
-    prefilter and the caller must apply the exact rect×geometry refine
-    (search._geometry_refine) with the returned pieces.
+    geometry is over the colgeom compile budget, the Column part
+    carries only its bbox prefilter and the caller must apply the
+    exact rect×geometry refine (search._geometry_refine) with the
+    returned pieces.
     """
     ast = parse(filt)
     missing = properties(ast) - set(columns)
@@ -726,12 +727,12 @@ def compile_filter(filt, columns: list[str]):
     refines: list[list] = []
     for conj in _conjuncts(ast):
         if (isinstance(conj, Op) and conj.op == "s_intersects"
-                and isinstance(conj.args[1], Geom)
-                and _s_intersects_column(conj.args[1]) is None):
-            # general geometry: bbox prefilter now, exact refine later
-            pieces = geometry_pieces(parse_wkb(conj.args[1].wkb))
-            c = bbox_overlap_col(*wkb_bounds(conj.args[1].wkb))
-            refines.append(pieces)
+                and isinstance(conj.args[1], Geom)):
+            c, exact, pieces = _s_intersects_cols(conj.args[1])
+            if exact is not None:
+                c = c & exact
+            else:  # bbox prefilter now, exact refine later
+                refines.append(pieces)
         else:
             c = to_column(conj)
         col = c if col is None else (col & c)

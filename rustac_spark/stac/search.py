@@ -27,8 +27,9 @@ Spark-first notes: every predicate is a Column expression, so
 Catalyst pushes it into the parquet scan (bbox-struct min/max column
 stats ⇒ row-group skipping — the covering-index effect of the
 reference's GeoParquet `covering` metadata, geoparquet.rs:397-435).
-Only non-rectangular `intersects` polygons add an Arrow-batched refine
-kernel after the bbox prefilter.
+An `intersects` geometry is the bbox prefilter AND the exact predicate
+compiled by geo/colgeom; only geometries over its compile budget add
+an Arrow-batched refine kernel after the prefilter.
 """
 
 from __future__ import annotations
@@ -40,10 +41,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..geo.colpreds import (bbox_overlap_col, pieces_column_pred,
-                            point_in_bbox_col)
+from ..geo.colpreds import bbox_overlap_col, s_intersects_cols
 from ..geo.predicates import rects_intersect_pieces
-from ..geo.wkbio import geojson_to_wkb, geometry_pieces, parse_wkb, wkb_bounds
+from ..geo.wkbio import geojson_to_wkb, geometry_pieces, parse_wkb
 from . import cql2
 from .datetime_parse import parse_interval
 
@@ -141,14 +141,9 @@ def _geojson_to_wkb(g: dict) -> bytes:
         raise SearchValidationError(str(e)) from e
 
 
-# shared pushdown-friendly bbox predicates live in geo/colpreds
-_bbox_overlap = bbox_overlap_col
-_point_in_bbox = point_in_bbox_col
-
-
 def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
-    """Exact refine for non-rectangular intersects geometries:
-    vectorized rect×geometry kernel over the bbox struct,
+    """Exact refine for intersects geometries over the colgeom compile
+    budget: vectorized rect×geometry kernel over the bbox struct,
     Arrow-batched. `pieces` is wkbio.geometry_pieces output — the row
     survives if its bbox intersects ANY piece (Multi* union
     semantics)."""
@@ -169,9 +164,6 @@ def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
             yield pdf[keep]
 
     return df.mapInPandas(refine, schema=schema)
-
-
-_pieces_column_pred = pieces_column_pred
 
 
 def build_plan(df: DataFrame, search: Search) -> DataFrame:
@@ -198,16 +190,16 @@ def build_plan(df: DataFrame, search: Search) -> DataFrame:
         b = list(search.bbox)
         if len(b) == 6:
             b = [b[0], b[1], b[3], b[4]]
-        preds.append(_bbox_overlap(*b))
+        preds.append(bbox_overlap_col(*b))
     if search.intersects is not None:
         wkb = (search.intersects if isinstance(search.intersects, bytes)
                else _geojson_to_wkb(search.intersects))
         pieces = geometry_pieces(parse_wkb(wkb))
-        col = _pieces_column_pred(pieces)
-        if col is not None:
-            preds.append(col)
+        prefilter, exact = s_intersects_cols(pieces)
+        preds.append(prefilter)
+        if exact is not None:
+            preds.append(exact)
         else:
-            preds.append(_bbox_overlap(*wkb_bounds(wkb)))  # prefilter
             refines.append(pieces)
     if search.datetime is not None:
         start, end = parse_interval(search.datetime)

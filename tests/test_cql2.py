@@ -203,17 +203,30 @@ def test_s_intersects_column_compile(spark):
         "s_intersects(geometry, POINT(-106 40.5)) and id = 'x'",
         ["id", "geometry", "bbox"])
     assert not short and col is not None and refines == []
-    # general polygon in AND position → prefilter col + one refine
+    # in-budget polygon: one exact Column, no refine, in AND or OR
     col, short, refines = compile_filter(
         "s_intersects(geometry, POLYGON((-107 39, -105 39, -106 41, -107 39)))",
         ["id", "geometry", "bbox"])
+    assert not short and col is not None and refines == []
+    col, short, refines = compile_filter(
+        "id = 'x' or s_intersects(geometry, "
+        "POLYGON((-107 39, -105 39, -106 41, -107 39)))",
+        ["id", "geometry", "bbox"])
+    assert not short and col is not None and refines == []
+    # over-budget polygon in AND position → prefilter col + one refine
+    import math
+    n = 200
+    big = ", ".join(f"{-106 + math.cos(2 * math.pi * i / n)} "
+                    f"{40 + math.sin(2 * math.pi * i / n)}"
+                    for i in list(range(n)) + [0])
+    col, short, refines = compile_filter(
+        f"s_intersects(geometry, POLYGON(({big})))",
+        ["id", "geometry", "bbox"])
     assert not short and col is not None and len(refines) == 1
-    # general polygon under OR → unsupported (refines are conjunctive)
+    # ... and under OR it is unsupported (refines are conjunctive)
     with pytest.raises(Cql2Error):
-        compile_filter(
-            "id = 'x' or s_intersects(geometry, "
-            "POLYGON((-107 39, -105 39, -106 41, -107 39)))",
-            ["id", "geometry", "bbox"])
+        compile_filter(f"id = 'x' or s_intersects(geometry, POLYGON(({big})))",
+                       ["id", "geometry", "bbox"])
 
 
 def test_s_intersects_empty_geometry(spark):
@@ -238,7 +251,7 @@ def test_s_intersects_empty_ring_polygon(spark):
     pieces are dropped in geometry_pieces."""
     import struct
 
-    from rustac_spark.geo.colpreds import pieces_column_pred
+    from rustac_spark.geo.colpreds import s_intersects_cols
     from rustac_spark.geo.wkbio import geometry_pieces, parse_wkb
 
     # WKB: little-endian, type=3 (Polygon), 1 ring with 0 points —
@@ -246,7 +259,8 @@ def test_s_intersects_empty_ring_polygon(spark):
     # fast path (wkb_bounds is never reached)
     empty_poly = struct.pack("<BIII", 1, 3, 1, 0)
     assert geometry_pieces(parse_wkb(empty_poly)) == []
-    assert pieces_column_pred([]) is not None
+    prefilter, exact = s_intersects_cols([])
+    assert prefilter is not None and exact is not None
     # a GeoJSON polygon with no rings compiles end-to-end, no crash
     col, short, refines = compile_filter(
         {"op": "s_intersects", "args": [

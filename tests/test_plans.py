@@ -41,6 +41,32 @@ def test_cql2_s_intersects_pushed_to_scan(stac_items):
     assert "mapInPandas" not in plan.lower()  # no refine for rect literals
 
 
+def test_polygon_intersects_is_one_pushed_column(stac_items):
+    """An in-budget polygon compiles to the bbox prefilter AND the exact
+    SAT predicate: no Python node and the prefilter pushed into the
+    scan. The same Column composes under OR, still without a Python
+    node (Spark pushes an OR only when both sides translate, so that
+    filter is evaluated after the scan)."""
+    tri = [[-106.1, 40.5], [-106.0, 40.5], [-106.05, 40.6],
+           [-106.1, 40.5]]
+    df = build_plan(stac_items, Search(
+        intersects={"type": "Polygon", "coordinates": [tri]},
+        fields="+id"))
+    plan = _physical(df)
+    assert "MapInPandas" not in plan and "Python" not in plan
+    pushed = plan.split("PushedFilters")[1][:400]
+    assert "bbox.xmin" in pushed and "bbox.ymax" in pushed
+    wkt = ", ".join(f"{x} {y}" for x, y in tri)
+    df = build_plan(stac_items, Search(
+        filter=f"id = 'x' OR s_intersects(geometry, POLYGON(({wkt})))",
+        fields="+id"))
+    plan = _physical(df)
+    assert "MapInPandas" not in plan and "Python" not in plan
+    assert ".xmin <= -106.0" in plan.split("Filter")[1]  # prefilter
+    assert df.count() == build_plan(stac_items, Search(
+        intersects={"type": "Polygon", "coordinates": [tri]})).count()
+
+
 def test_intersects_multipolygon_rects_stay_column(stac_items):
     # multiple axis-aligned rings → OR of bbox overlaps, still no UDF
     mp = {"type": "MultiPolygon", "coordinates": [
@@ -63,7 +89,8 @@ def test_datetime_filter_pushed_to_scan(stac_items):
     assert "Exchange" not in plan
 
 
-def test_spatial_join_is_broadcast_and_single_scan(spark, queries_df):
+def test_spatial_join_is_broadcast_and_single_scan(spark, queries_df,
+                                                   monkeypatch):
     from rustac_spark import DATA_DIR
     from rustac_spark.geocode import with_geocode
     pages = with_geocode(
@@ -72,24 +99,19 @@ def test_spatial_join_is_broadcast_and_single_scan(spark, queries_df):
     plan = _physical(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # round-7 default: the polygon residual is the COMPILED predicate
-    # (a standalone Filter), so the big (pages) side is scanned
-    # exactly once and there is no reject side at all
+    # the polygon residual is the compiled predicate (a standalone
+    # Filter), so the big (pages) side is scanned exactly once
     assert plan.count("pages_sf0.001.parquet") == 1
     # no shuffle on the pages side: the only Exchanges are broadcasts
     assert "Exchange hashpartitioning" not in plan
-    # the explicit memo fallback still lands its reject set as a
-    # LocalRelation (collected driver-side at build; over-cap sets
-    # ride as an InMemoryRelation whose toString embeds the pre-cache
-    # subtree — count scans outside that description)
-    memo = spatial_join(pages, queries_df, page_cols=["url"],
-                        compile_polygons=False)
-    mplan = _physical(memo)
-    live = mplan.split("InMemoryRelation")[0]
-    assert live.count("pages_sf0.001.parquet") == 1
-    assert ("LocalTableScan" in mplan or "Scan ExistingRDD" in mplan
-            or "InMemoryTableScan" in mplan)
-    assert "Exchange hashpartitioning" not in live
+    # over the compile budget the inline Arrow refine keeps the same
+    # shape: one pages scan, no shuffle, one Python stage
+    from rustac_spark.geo import colgeom
+    monkeypatch.setattr(colgeom, "DEFAULT_VERTEX_BUDGET", 0)
+    aplan = _physical(spatial_join(pages, queries_df, page_cols=["url"]))
+    assert aplan.count("pages_sf0.001.parquet") == 1
+    assert "Exchange hashpartitioning" not in aplan
+    assert "MapInPandas" in aplan
 
 
 def test_tiles_is_narrow_until_aggregation(spark):
@@ -321,11 +343,10 @@ def test_semdedup_no_python_capped_pairs(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_memo_refine_leaves_no_persisted_rdds(spark, queries_df):
-    """The reject set is collected driver-side and rebroadcast from a
-    LocalRelation, so building (and running) the default polygon join
-    must leave NO persisted RDD behind — a long-lived session (the
-    HTTP server) would otherwise leak one cached frame per search."""
+def test_polygon_join_leaves_no_persisted_rdds(spark, queries_df):
+    """Building (and running) the default polygon join must leave NO
+    persisted RDD behind — a long-lived session (the HTTP server)
+    would otherwise leak one cached frame per search."""
     from rustac_spark import DATA_DIR
     from rustac_spark.geocode import with_geocode
     spark.catalog.clearCache()
