@@ -54,6 +54,8 @@ class SnapshotTable:
         self.spark = spark
         self.dir = table_dir
         self.fs = _fs_for(spark, table_dir)
+        # (tuple(files), DataFrame) of the last read(); see read()
+        self._read_slot: tuple | None = None
 
     # ------------------------------------------------------- reading
 
@@ -73,11 +75,35 @@ class SnapshotTable:
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """DataFrame over a snapshot's exact file list (defaults to
-        CURRENT) — time travel is just reading an older manifest."""
-        files = self.manifest(snapshot_id)["files"]
+        CURRENT) — time travel is just reading an older manifest.
+
+        The frame of the last file list read is held and returned
+        again while the list is unchanged, so a read costs one
+        manifest lookup instead of a file listing and a schema
+        inference job. Safe because data files are immutable and
+        every commit publishes a new list (read-your-write holds);
+        keyed on the list, not the snapshot id, because ids restart
+        when a table directory is recreated. A new list that shares a
+        file with the held one is the same table, which has one schema
+        (the reader has no mergeSchema pass), so its frame takes the
+        held schema instead of running the inference job again; a
+        recreated table shares no file (batch dirs are uuids). The
+        slot holds the lazy frame and its file index, never data (no
+        persist, no cache), and is replaced by one tuple assignment,
+        so concurrent readers under the threaded server see either
+        slot whole."""
+        files = tuple(self.manifest(snapshot_id)["files"])
         if not files:
             raise ValueError("empty snapshot")
-        return self.spark.read.parquet(*files)
+        slot = self._read_slot
+        if slot is not None and slot[0] == files:
+            return slot[1]
+        reader = self.spark.read
+        if slot is not None and not set(slot[0]).isdisjoint(files):
+            reader = reader.schema(slot[1].schema)
+        df = reader.parquet(*files)
+        self._read_slot = (files, df)
+        return df
 
     def history(self) -> list[dict]:
         out = []
@@ -221,9 +247,8 @@ class SnapshotTable:
         parent = self.current_snapshot_id()
         old = self.manifest(parent)["files"]
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        cur = self.spark.read.parquet(*old)
         touched = {r["f"] for r in
-                   (cur.where(cond)
+                   (self.read(parent).where(cond)
                     .select(F.input_file_name().alias("f"))
                     .distinct().collect())}
         # input_file_name returns URIs (file:///…); manifests hold

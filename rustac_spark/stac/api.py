@@ -7,9 +7,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from .search import Search, build_plan, parse_sortby
+from .search import Search, build_plan, order_nulls_last, parse_sortby
 
 DEFAULT_LIMIT = 10  # crates/server/src/lib.rs:57
 
@@ -29,19 +30,56 @@ class Page:
 def search_page(df: DataFrame, search: Search,
                 skip: int = 0) -> Page:
     """Paged search with the memory backend's skip/take token scheme.
-    Deterministic pagination requires a total order: when the search
-    has no sortby, a tie-break sort on id is injected (SURVEY §2.6)."""
+
+    Skip paging needs a total order, so the id tie-break is appended
+    to every sort that lacks it (SURVEY §2.6): with only a tied key
+    such as ``-eo:cloud_cover``, rows tied at a page edge could land
+    on two pages or on none.
+
+    One Spark job over one scan: ``numberMatched`` is an unnamed
+    per-call Observation counting the filtered rows below the sort,
+    so the plan is TakeOrderedAndProject(offset) ← CollectMetrics ←
+    Filter ← pushed Scan. The count is exact — CollectMetrics sits in
+    the result stage, whose accumulator updates Spark applies once
+    per partition — and it is read only after the collect returns."""
     limit = search.limit if search.limit is not None else DEFAULT_LIMIT
-    base = Search(**{**search.__dict__, "limit": None, "offset": None})
-    if not base.sortby:
-        base.sortby = "id"
+    base = Search(**{**search.__dict__, "sortby": None, "limit": None,
+                     "offset": None})
     plan = build_plan(df, base)
-    matched = plan.count()
-    rows = plan.offset(skip).limit(limit).collect()
+    seen = Observation()
+    observed = plan.observe(seen, F.count(F.lit(1)).alias("n"))
+    rows = (order_nulls_last(observed, _total_order(search.sortby))
+            .offset(skip).limit(limit).collect())
+    matched = _observed_count(seen, plan)
     nxt = {"skip": skip + limit} if skip + limit < matched else None
     prv = {"skip": max(0, skip - limit)} if skip > 0 else None
     return Page(rows=rows, number_matched=matched,
                 number_returned=len(rows), next_token=nxt, prev_token=prv)
+
+
+def _total_order(sortby) -> list[tuple[str, bool]]:
+    """parse_sortby keys with the ascending id tie-break appended
+    unless id is already a key: the tuple is then a total order."""
+    keys = parse_sortby(sortby) if sortby else []
+    if not any(f == "id" for f, _ in keys):
+        keys = keys + [("id", True)]
+    return keys
+
+
+def _observed_count(seen: Observation, plan: DataFrame) -> int:
+    """The observed row count, or `plan.count()` when the optimizer
+    folded the page to an empty relation (the CQL2 unknown-column
+    short-circuit under a skip, or limit 0): CollectMetrics never ran
+    and ``Observation.get`` raises java.lang.AssertionError. That
+    fallback scans nothing on the short-circuit and is off the
+    common path."""
+    try:
+        return seen.get["n"]
+    except Py4JJavaError as e:
+        if (e.java_exception.getClass().getName()
+                != "java.lang.AssertionError"):
+            raise
+        return plan.count()
 
 
 def search_page_keyset(df: DataFrame, search: Search,
@@ -60,11 +98,9 @@ def search_page_keyset(df: DataFrame, search: Search,
     total order. numberMatched costs a full count — off by default
     (the reference's context extension also makes it optional)."""
     limit = search.limit if search.limit is not None else DEFAULT_LIMIT
-    base = Search(**{**search.__dict__, "limit": None, "offset": None})
-    keys = parse_sortby(base.sortby) if base.sortby else []
-    if not any(f == "id" for f, _ in keys):
-        keys = keys + [("id", True)]
-    base.sortby = keys
+    keys = _total_order(search.sortby)
+    base = Search(**{**search.__dict__, "sortby": keys, "limit": None,
+                     "offset": None})
     plan = build_plan(df, base)
     matched = plan.count() if count_matched else -1
     if after:

@@ -166,6 +166,17 @@ def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
     return df.mapInPandas(refine, schema=schema)
 
 
+def order_nulls_last(df: DataFrame,
+                     keys: list[tuple[str, bool]]) -> DataFrame:
+    """Sort on parse_sortby keys with NULLS LAST in both directions —
+    the reference's engine (DuckDB default_null_order) sorts nulls
+    last under ASC and DESC alike; Spark's bare asc() would put them
+    first."""
+    return df.orderBy(*[F.col(_q(f)).asc_nulls_last() if asc
+                        else F.col(_q(f)).desc_nulls_last()
+                        for f, asc in keys])
+
+
 def build_plan(df: DataFrame, search: Search) -> DataFrame:
     """Compile a Search into a lazy DataFrame plan."""
     search.validate()
@@ -225,13 +236,7 @@ def build_plan(df: DataFrame, search: Search) -> DataFrame:
         df = df.select(*[_q(c) for c in keep])
 
     if search.sortby:
-        keys = parse_sortby(search.sortby)
-        # NULLS LAST for both directions — the reference's engine
-        # (DuckDB default_null_order) sorts nulls last under ASC and
-        # DESC alike; Spark's bare asc() would put them first
-        df = df.orderBy(*[F.col(_q(f)).asc_nulls_last() if asc
-                          else F.col(_q(f)).desc_nulls_last()
-                          for f, asc in keys])
+        df = order_nulls_last(df, parse_sortby(search.sortby))
 
     if search.offset:
         df = df.offset(int(search.offset))

@@ -203,3 +203,62 @@ def test_fetch_early_exit_does_not_block_on_prefetch(mock_api):
     gen.close()  # GeneratorExit inside the yield loop
     assert time.time() - t0 < 2.0
     assert first["id"] == "item-0"
+
+
+_EARLY_EXIT = '''
+import json, sys, threading, time
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+sys.path.insert(0, sys.argv[1])
+from rustac_spark.stac.api_client import fetch_search_features
+
+
+class Slow(BaseHTTPRequestHandler):
+    def do_POST(self):
+        n = int(self.headers.get("Content-Length", 0))
+        page = json.loads(self.rfile.read(n) or b"{}").get("page", 0)
+        if page:
+            time.sleep(30)  # the prefetched page hangs
+        base = "http://" + self.headers["Host"]
+        out = json.dumps({"type": "FeatureCollection",
+                          "features": [{"id": "item-%d" % page}],
+                          "links": [{"rel": "next", "href": base + "/search",
+                                     "body": {"page": page + 1}}]}).encode()
+        self.send_response(200)
+        self.send_header("Content-Length", str(len(out)))
+        self.end_headers()
+        self.wfile.write(out)
+
+    def log_message(self, *a):
+        pass
+
+
+srv = ThreadingHTTPServer(("127.0.0.1", 0), Slow)
+threading.Thread(target=srv.serve_forever, daemon=True).start()
+gen = fetch_search_features(
+    "http://127.0.0.1:%d" % srv.server_address[1], {}, timeout=60)
+assert next(gen)["id"] == "item-0"
+t0 = time.time()
+gen.close()
+print(time.time() - t0)
+'''
+
+
+def test_abandoned_prefetch_does_not_hold_process_exit():
+    """A caller that stops after the first page while the prefetch of
+    the next one hangs on a slow server returns promptly, and so does
+    its process: the prefetch thread is a daemon, so interpreter exit
+    does not join it (a pool worker would hold exit for the 30 s the
+    server stalls)."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    t0 = time.time()
+    out = subprocess.run([sys.executable, "-c", _EARLY_EXIT, repo],
+                         capture_output=True, text=True, timeout=120)
+    wall = time.time() - t0
+    assert out.returncode == 0, out.stderr
+    assert float(out.stdout.strip()) < 1.0  # close() did not wait
+    assert wall < 20.0  # exit did not wait for the stalled prefetch

@@ -357,3 +357,81 @@ def test_polygon_join_leaves_no_persisted_rdds(spark, queries_df):
     assert out.count() > 0
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after == before
+
+
+def _jobs_of(sc, group: str, fn):
+    """Run fn under a fresh job group; (result, job ids of the group)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _last_executed_plan(spark) -> str:
+    """Physical plan text of the newest SQL execution in the status
+    store — the plan a library call actually ran."""
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    last = max((execs.apply(i) for i in range(execs.size())),
+               key=lambda e: e.executionId())
+    return last.physicalPlanDescription()
+
+
+def test_skip_page_is_one_job_over_one_scan(spark, stac_items):
+    """A skip-paged search collects its rows and observes numberMatched
+    in ONE job: TakeOrderedAndProject(offset) over CollectMetrics over
+    the pushed-down scan, and no count() pass of its own."""
+    from rustac_spark.stac.api import search_page
+    sc = spark.sparkContext
+    s = Search(bbox=[-106.1, 40.4, -105.9, 40.6], limit=3)
+    page, jobs = _jobs_of(sc, "skip-page",
+                          lambda: search_page(stac_items, s, skip=2))
+    assert len(jobs) == 1
+    plan = _last_executed_plan(spark)
+    top = plan.split("TakeOrderedAndProject")[1]
+    assert "CollectMetrics" in top and "Scan parquet" in top
+    assert plan.index("TakeOrderedAndProject") < plan.index(
+        "CollectMetrics") < plan.index("Scan parquet")
+    pushed = plan.split("PushedFilters")[1][:400]
+    assert "bbox.xmin" in pushed and "bbox.ymax" in pushed
+    assert page.number_matched == build_plan(stac_items, Search(
+        bbox=s.bbox)).count()
+
+
+def test_keyset_page_is_one_job(spark, stac_items):
+    from rustac_spark.stac.api import search_page_keyset
+    sc = spark.sparkContext
+    s = Search(sortby="-datetime", limit=5)
+    first = search_page_keyset(stac_items, s)
+    page, jobs = _jobs_of(sc, "keyset-page", lambda: search_page_keyset(
+        stac_items, s, after=first.next_token))
+    assert len(jobs) == 1 and page.number_returned == 5
+
+
+def test_snapshot_read_frame_is_reused_until_a_commit(spark, stac_items,
+                                                      tmp_path):
+    """A second read of an unchanged snapshot runs zero jobs and hands
+    back the same lazy frame; a commit changes the file list, so the
+    next read is a new frame that sees the write — built on the held
+    schema, so it too runs no job. Searching the held frame persists
+    nothing."""
+    from rustac_spark.stac.api import search_page
+    from rustac_spark.stac.transactions import TransactionClient
+    sc = spark.sparkContext
+    txn = TransactionClient(spark, str(tmp_path / "tbl"))
+    txn.add_items(stac_items.limit(20))
+    first = txn.read()
+    again, jobs = _jobs_of(sc, "reread", txn.read)
+    assert jobs == [] and again is first
+    before = sc._jsc.getPersistentRDDs().size()
+    search_page(txn.read(), Search(limit=5), skip=5)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    txn.add_item({"type": "Feature", "id": "fresh", "collection": "c",
+                  "geometry": {"type": "Point",
+                               "coordinates": [1.0, 2.0]},
+                  "properties": {"datetime": "2024-01-01T00:00:00Z"}})
+    after, jobs = _jobs_of(sc, "read-after-commit", txn.read)
+    assert jobs == [] and after is not first
+    assert after.where("id = 'fresh'").count() == 1

@@ -317,3 +317,92 @@ def test_put_delete_collection_roundtrip(spark, stac_items, tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def _circle(n: int = 120) -> dict:
+    """A polygon over the compile vertex budget (Arrow refine path)."""
+    import math
+    ring = [[-106.0 + 0.05 * math.cos(2 * math.pi * k / n),
+             40.5 + 0.05 * math.sin(2 * math.pi * k / n)]
+            for k in range(n)]
+    return {"type": "Polygon", "coordinates": [ring + [ring[0]]]}
+
+
+@pytest.mark.parametrize("body", [
+    {"filter": "nope:col = 1", "limit": 5, "skip": 3},
+    {"ids": ["no-such-item"], "limit": 5, "skip": 2},
+    {"bbox": [-106.1, 40.4, -105.9, 40.6], "limit": 5, "skip": 1000},
+    {"fields": "+datetime", "sortby": "-eo:cloud_cover", "limit": 5,
+     "skip": 7},
+    {"intersects": _circle(), "limit": 5, "skip": 2},
+])
+def test_search_post_observed_count_edge_cases(server, stac_items, body):
+    """numberMatched comes from the page scan's observation; each edge
+    case answers 200 with the count a plain count() gives — including
+    the short-circuit folded to an empty relation, which used to drop
+    the connection when skip > 0."""
+    from rustac_spark.stac.search import build_plan
+    from rustac_spark.stac.server import _params_to_search
+    st, fc = _post(f"{server}/search", body)
+    assert st == 200
+    plain = {k: v for k, v in body.items() if k not in ("skip", "limit")}
+    want = build_plan(stac_items, _params_to_search(plain)).count()
+    assert fc["numberMatched"] == want
+    assert fc["numberReturned"] == max(0, min(5, want - body["skip"]))
+
+
+def test_concurrent_mixed_reads_match_serial(spark, stac_items, tmp_path):
+    """8 threads send bbox, CQL2, polygon (in and over budget),
+    skip-page, keyset and item reads to one server over a snapshot
+    table: every reply equals the serial reply, with no exceptions."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rustac_spark.stac.transactions import TransactionClient
+    txn = TransactionClient(spark, str(tmp_path / "tbl"))
+    txn.add_items(stac_items)
+    srv, base = serve(txn=txn, background=True)
+    tri = [[-106.1, 40.4], [-105.9, 40.4], [-106.0, 40.6], [-106.1, 40.4]]
+    reqs = [
+        ("POST", "/search", {"bbox": [-106.1, 40.4, -105.9, 40.6],
+                             "limit": 7}),
+        ("POST", "/search", {"filter": "eo:cloud_cover < 50",
+                             "sortby": "-eo:cloud_cover", "limit": 6}),
+        ("POST", "/search", {"intersects": {"type": "Polygon",
+                                            "coordinates": [tri]},
+                             "limit": 5}),
+        ("POST", "/search", {"intersects": _circle(), "limit": 5}),
+        ("POST", "/search", {"sortby": "-datetime", "limit": 8,
+                             "skip": 16}),
+        ("GET", "/search?paging=keyset&limit=9&sortby=-datetime", None),
+        ("GET", "/collections/collection-a/items/item-0042", None),
+    ]
+
+    def call(i):
+        method, path, body = reqs[i]
+        req = urllib.request.Request(
+            base + path,
+            data=json.dumps(body).encode() if body is not None else None,
+            headers={"Content-Type": "application/json"}, method=method)
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, json.loads(r.read().decode())
+
+    def worker(t):
+        order = [(t + k) % len(reqs) for k in range(len(reqs))]
+        return [(i, call(i)) for i in order]
+
+    switch = sys.getswitchinterval()
+    try:
+        serial = [call(i) for i in range(len(reqs))]
+        assert all(st == 200 for st, _ in serial)
+        sys.setswitchinterval(1e-4)  # interleave the handler threads
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            replies = list(ex.map(worker, range(8)))
+    finally:
+        sys.setswitchinterval(switch)
+        srv.shutdown()
+        srv.server_close()
+    assert sum(len(r) for r in replies) == 8 * len(reqs)
+    for per_thread in replies:
+        for i, got in per_thread:
+            assert got == serial[i], reqs[i]

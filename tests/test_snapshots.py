@@ -197,3 +197,18 @@ def test_expire_snapshots_vacuum(spark, tmp_path):
     assert t.read().count() == 25
     # idempotent when nothing to expire beyond the horizon
     assert t.expire_snapshots(keep_last=10)["deleted_files"] == 0
+
+
+def test_read_frame_follows_a_recreated_table(spark, tmp_path):
+    """The held read frame is keyed on the file list, not the snapshot
+    id: a table directory recreated under the same SnapshotTable (ids
+    restart at 1) with another schema reads its own rows and schema."""
+    import shutil
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(_rows(spark, range(5)))
+    assert t.read().count() == 5
+    shutil.rmtree(tmp_path / "t")
+    assert t.create(spark.createDataFrame(
+        [("a", 1.5)], "name string, score double")) == 1
+    df = t.read()
+    assert df.columns == ["name", "score"] and df.count() == 1

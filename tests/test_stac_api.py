@@ -80,7 +80,10 @@ def test_search_page_keyset_null_sort_keys(spark):
             for i in range(30)]
     df = spark.createDataFrame(
         rows, "id string, score double, grp string")
-    for sortby in ("score,id", "-score,id", "grp,-score,id", "-grp,id"):
+    # "-score" alone is heavily tied: skip paging must append the id
+    # tie-break too, or tied rows at a page edge repeat or vanish
+    for sortby in ("score,id", "-score,id", "grp,-score,id", "-grp,id",
+                   "-score"):
         s = Search(sortby=sortby, limit=4)
         seen, token = [], None
         for _ in range(20):
@@ -96,7 +99,7 @@ def test_search_page_keyset_null_sort_keys(spark):
             if p.next_token is None:
                 break
             skip = p.next_token["skip"]
-        assert seen == ref and len(seen) == 30, sortby
+        assert seen == ref and len(set(seen)) == len(seen) == 30, sortby
 
 
 def test_queryables_and_conformance(stac_items):
@@ -207,3 +210,50 @@ def test_grid_frequency_cells(spark):
         return encode_py(6, xi, yi)
     assert out[cell6(-0.3, -0.3)] == 2
     assert out[cell6(10.1, 20.1)] == 1
+
+
+def _over_budget_circle(n: int = 120) -> dict:
+    import math
+    ring = [[-106.0 + 0.05 * math.cos(2 * math.pi * k / n),
+             40.5 + 0.05 * math.sin(2 * math.pi * k / n)]
+            for k in range(n)]
+    return {"type": "Polygon", "coordinates": [ring + [ring[0]]]}
+
+
+# (search, skip) pairs whose observed numberMatched must equal a plain
+# count of the same filter: a short-circuit the optimizer folds to an
+# empty relation, an empty match, a skip beyond numberMatched, a fields
+# projection that drops the sort keys, an over-budget polygon (Arrow
+# refine under the observation) and a zero limit (page folded away)
+OBSERVED_CASES = [
+    (Search(filter="nope:col = 1", limit=5), 3),
+    (Search(filter="nope:col = 1", limit=5), 0),
+    (Search(ids=["no-such-item"], limit=5), 2),
+    (Search(bbox=[-106.1, 40.4, -105.9, 40.6], limit=5), 1000),
+    (Search(fields="+datetime", sortby="-eo:cloud_cover", limit=5), 7),
+    (Search(intersects=_over_budget_circle(), limit=5), 2),
+    (Search(limit=0), 0),
+]
+
+
+@pytest.mark.parametrize("search,skip", OBSERVED_CASES)
+def test_observed_number_matched_edge_cases(stac_items, search, skip):
+    from rustac_spark.stac.search import build_plan
+    page = search_page(stac_items, search, skip=skip)
+    plain = build_plan(stac_items, Search(
+        **{**search.__dict__, "limit": None}))
+    want = plain.count()
+    assert page.number_matched == want
+    assert page.number_returned == len(page.rows) == max(
+        0, min(search.limit, want - skip))
+    if search.intersects:  # really the Arrow refine, matching items
+        assert "MapInPandas" in (
+            plain._jdf.queryExecution().executedPlan().toString())
+        assert want > 0
+    if search.fields:
+        # the page keeps the projection and the full sort order
+        ref = build_plan(stac_items, Search(
+            sortby="-eo:cloud_cover,id")).collect()[skip:skip + 5]
+        assert [r.asDict() for r in page.rows] == [
+            {"datetime": r["datetime"]} for r in ref]
+
